@@ -1,64 +1,18 @@
-"""Explicit skew handling for joins (north_rule: "partitioning / shuffle
-/ skew handled explicitly").
+"""Explicit skew handling (north_rule: "partitioning / shuffle / skew
+handled explicitly").
 
-AQE's skew-join splitting (spark.sql.adaptive.skewJoin, on by default in
-session.get_spark) covers sort-merge joins it can observe at runtime;
-`salted_join` is the deterministic fallback for the cases AQE cannot
-fix — e.g. a hot key on the BUILD side of a shuffled hash join, or when
-runtime statistics are disabled.  The companion for aggregations is
+Skewed joins are left to AQE's skew-join splitting
+(spark.sql.adaptive.skewJoin, on by default in session.get_spark).
+This module measures skew: `hot_keys` profiles the most frequent values
+per column and `heavy_hitter_keys` finds every key above a share
+threshold.  The companion for aggregations is
 operators/uniqueness.exact_count_distinct_salted (salted two-stage agg).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: str,
-    salt_from: str | Column,
-    n_salt: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join where hot `on`-keys in `fact` are spread across
-    ``n_salt`` reducers: the fact side gets a deterministic salt derived
-    from ``salt_from`` (any roughly-unique fact column — NOT the join
-    key), the dim side is replicated n_salt× via explode, and the join
-    runs on (key, salt).  Output = exactly the plain join's rows.
-
-    Cost model: dim is duplicated n_salt× through the shuffle — use for
-    mid-size dims (too big to broadcast, small enough to replicate) with
-    a skewed fact key; for small dims broadcast instead.
-
-    Only fact-preserving join types are allowed: under right/full outer
-    joins every unmatched dim REPLICA would surface as a spurious
-    null-extended row (n_salt of them per unmatched key).
-    """
-    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
-               "leftsemi", "left_anti", "leftanti", "semi", "anti"}
-    if how.replace("_", "").lower() not in {a.replace("_", "") for a in allowed}:
-        raise ValueError(
-            f"salted_join supports fact-preserving joins only, not {how!r}: "
-            "the replicated dim side would emit one spurious null-extended "
-            "row per unmatched (key, salt) replica under right/full outer"
-        )
-    if n_salt < 1:
-        # pmod(h, 0) is NULL row-for-row (non-ANSI): an inner join would
-        # silently return zero rows, a left join null-extend everything —
-        # the opposite of the 'exactly the plain join's rows' contract
-        raise ValueError(f"n_salt must be >= 1, got {n_salt}")
-    sf = F.col(salt_from) if isinstance(salt_from, str) else salt_from
-    f = fact.withColumn(
-        "__salt", F.pmod(F.xxhash64(sf.cast("string")), F.lit(n_salt)).cast("int")
-    )
-    d = dim.withColumn(
-        "__salt",
-        F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1)).cast("array<int>")),
-    )
-    return f.join(d, [on, "__salt"], how).drop("__salt")
 
 
 def hot_keys(

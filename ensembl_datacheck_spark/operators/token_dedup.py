@@ -1,15 +1,11 @@
 """Sequence-level dedup over the actual input_hint payload: MinHash
 directly on `tokens: array<int32>` — no text, no words.
 
-Shingling and MinHash run in ONE Arrow-batched pandas UDF using numpy
-stride tricks: k-token shingles are hashed with a vectorized polynomial
-(no Python loop over rows or shingles), then H permutation minima come
-from `(a*x+b) mod p` over the shingle-hash vector.  This is the Arrow
-tier the input_hint mandates — the whole signature computation is a
-single numpy pass per batch.
-
-Banding / candidate-pair generation reuses the same LSH plan shape as
-text MinHash (dedup.py): explode band keys → bucket groupBy → pairs.
+k-token shingles are sliced JVM-side (token_shingle_slices_jvm), hashed
+portably and folded through the text tier's affine-minima signature and
+banding (dedup.py) — see portable_token_minhash_candidates.  Exact
+Jaccard verification of candidate pairs hashes shingles with a
+vectorized numpy polynomial (_shingle_hashes) in an Arrow pandas UDF.
 """
 
 from __future__ import annotations
@@ -19,8 +15,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-_P = (1 << 61) - 1  # Mersenne prime for the permutation family
 
 
 def _shingle_hashes(arr: np.ndarray, k: int) -> np.ndarray:
@@ -41,63 +35,6 @@ def _shingle_hashes(arr: np.ndarray, k: int) -> np.ndarray:
     for j in range(k):
         out = out * base + a64[j : j + n]
     return out
-
-
-def _minhash_matrix(sh: np.ndarray, a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """H permutation minima of (a*x + b) mod p over shingle hashes —
-    one (H, n) broadcast, reduced along n."""
-    x = sh.astype(np.uint64) % np.uint64(_P)
-    # (H, n) = a[:,None]*x[None,:] + b[:,None]  mod p  (uint64 wrap is fine
-    # as a hash; we only need a consistent total order)
-    m = a[:, None] * x[None, :] + b[:, None]
-    return m.min(axis=1)
-
-
-def token_minhash_signature(
-    col: Column, k: int = 8, n_hashes: int = 64, seed: int = 42
-) -> Column:
-    """Arrow-tier signature: array<bigint> of length n_hashes."""
-    rng = np.random.default_rng(seed)
-    a = rng.integers(1, _P, size=n_hashes, dtype=np.uint64)
-    b = rng.integers(0, _P, size=n_hashes, dtype=np.uint64)
-
-    def fn(tokens: pd.Series) -> pd.Series:
-        out = []
-        for arr in tokens:
-            if arr is None or len(arr) == 0:
-                out.append(None)
-                continue
-            sh = _shingle_hashes(np.asarray(arr, dtype=np.int64), k)
-            out.append(_minhash_matrix(sh, a, b).astype(np.int64).tolist())
-        return pd.Series(out, dtype=object)
-
-    return pandas_udf(fn, "array<bigint>")(col)
-
-
-def token_minhash_candidates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    k: int = 8,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup candidate pairs over token sequences (id_a < id_b).
-    Jaccard threshold ≈ (1/b)^(1/r) with r = n_hashes/n_bands."""
-    from ensembl_datacheck_spark.operators.dedup import lsh_band_keys
-
-    rows_per_band = n_hashes // n_bands
-    sig = df.select(
-        F.col(id_col).alias("id"),
-        token_minhash_signature(F.col(tokens_col), k, n_hashes, seed).alias("sig"),
-    ).filter(F.col("sig").isNotNull())
-    banded = sig.select(
-        "id", F.explode(lsh_band_keys("sig", n_bands, rows_per_band)).alias("bk")
-    )
-    from ensembl_datacheck_spark.operators.dedup import bucket_candidate_pairs
-
-    return bucket_candidate_pairs(banded)
 
 
 def token_shingle_slices_jvm(
@@ -121,50 +58,6 @@ def token_shingle_slices_jvm(
     return slices
 
 
-def token_minhash_candidates_jvm(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    tokens_col: str = "tokens",
-    k: int = 8,
-    n_hashes: int = 64,
-    n_bands: int = 16,
-) -> DataFrame:
-    """All-JVM token MinHash tier: k-token windows from
-    token_shingle_slices_jvm (zero Python anywhere — the input_hint's
-    'no per-row Python' taken one step further than the Arrow tier),
-    hashed post-explode with native xxhash64 and folded through the SAME
-    codegen min-aggregate → banding → capped hub-spoke pairing plan as
-    text MinHash (64-bit seeded signature family, _min_sig_agg64).  The
-    shuffle carries map-side-aggregated signature partials, never
-    shingles.
-
-    Signatures differ numerically from token_minhash_candidates (numpy
-    polynomial family vs seeded xxhash64) — both are valid MinHash
-    families with equivalent candidate quality; measured throughput at
-    64-token rows is comparable (BENCH/BASELINE.md token-dedup table).
-    Prefer this tier when Python workers are constrained (no Arrow
-    transfer of the widest column); prefer the Arrow tier when numpy
-    vectorization wins on very long sequences."""
-    from ensembl_datacheck_spark.operators.dedup import (
-        _min_sig_agg64,
-        bucket_candidate_pairs,
-        lsh_band_keys,
-    )
-
-    rows_per_band = n_hashes // n_bands
-    t = df.select(
-        F.col(id_col).alias("id"), F.col(tokens_col).alias("toks")
-    ).filter(F.col("toks").isNotNull() & (F.size("toks") > 0))
-    sh = t.select(
-        "id", F.explode(token_shingle_slices_jvm("toks", k)).alias("g")
-    )
-    sig = _min_sig_agg64(sh, n_hashes)
-    banded = sig.select(
-        "id", F.explode(lsh_band_keys("sig", n_bands, rows_per_band)).alias("bk")
-    )
-    return bucket_candidate_pairs(banded)
-
-
 def portable_token_minhash_candidates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -181,10 +74,9 @@ def portable_token_minhash_candidates(
     (first 8 hex chars of md5 → bigint — DuckDB:
     CAST('0x'||substring(md5(g),1,8) AS BIGINT)), folded through the
     shared MH_COEFFS affine-minima aggregation and banded exactly like
-    the text tier.  Same plan shape as token_minhash_candidates_jvm:
-    explode shingles → one codegen min-aggregate groupBy(id) (map-side
-    partials, the shuffle carries signatures, never shingles) → band
-    self-join.  Null/empty token rows are dropped (no signature)."""
+    the text tier.  Plan shape: explode shingles → one codegen
+    min-aggregate groupBy(id) (map-side partials, the shuffle carries
+    signatures, never shingles) → band self-join.  Null/empty token rows are dropped (no signature)."""
     from ensembl_datacheck_spark.operators.dedup import (
         MH_COEFFS,
         _min_sig_agg,

@@ -3996,8 +3996,8 @@ def dsir_topk_documents(spark, sf_dir):
     d = t["documents"].filter(F.col("doc_id") < 400)
     toks = d.select("doc_id", "lang", _derived_tokens_col().alias("tokens"))
     # FUSED tier (importance_log_weights_from_docs): identical weights
-    # to the bag path up to float summation order — the oracle's bag
-    # formulation still matches because only rank/count INTEGERS are
+    # to the oracle's per-document bag formulation up to float
+    # summation order — it matches because only rank/count INTEGERS are
     # compared and the boundary gap dwarfs the reordering error
     # (test_driver_fixture_rank_boundary_gap) — with one shuffle row
     # per document instead of the ~10^9-row (doc, feat) bag shuffle at

@@ -98,13 +98,11 @@ def main() -> None:
 
         # DSIR end-to-end, FUSED path: profiles straight from token
         # arrays (shuffle bounded by B), occurrence-level scoring (one
-        # shuffle row per doc), top-1000.  The bag path
-        # (hashed_ngram_features -> importance_log_weights) was
-        # measured once at 813.91 s on this input — its (id, feat) bag
-        # shuffle is ~10^9 rows — and is deliberately NOT in the loop;
-        # the fused tier below is the production scorer.  Target slice
-        # = a deterministic 10% of docs (synth doc_ids are strings, so
-        # slice by the portable md5 bucket).
+        # shuffle row per doc), top-1000 — the production scorer; the
+        # per-document bag formulation it replaced took 813.91 s on this
+        # input (~10^9-row (id, feat) shuffle, BENCH/LM_1M.md).  Target
+        # slice = a deterministic 10% of docs (synth doc_ids are strings,
+        # so slice by the portable md5 bucket).
         from ensembl_datacheck_spark.operators.corpus import split_bucket
 
         for tier in ("portable", "fast") if "dsir" in tiers else ():

@@ -71,17 +71,17 @@ def token_docs(spark):
 
 
 def test_token_minhash_candidates(token_docs):
-    cands = {
-        (r["id_a"], r["id_b"])
-        for r in TD.token_minhash_candidates(
-            token_docs, k=8, n_hashes=32, n_bands=16
-        ).collect()
-    }
-    assert (1, 2) in cands
-    assert (1, 3) in cands
-    assert not any(4 in p for p in cands)
-    # null/empty rows never become candidates
-    assert not any(5 in p or 6 in p for p in cands)
+    """Exact and near duplicates pair up; the unrelated doc and the
+    null/empty rows never become candidates, at the default k and at
+    the k=8 the exact-Jaccard verification uses."""
+    for k in (3, 8):
+        cands = {
+            (r["id_a"], r["id_b"])
+            for r in TD.portable_token_minhash_candidates(
+                token_docs, k=k
+            ).collect()
+        }
+        assert cands == {(1, 2), (1, 3), (2, 3)}, k
 
 
 def test_token_exact_jaccard(token_docs):
@@ -101,7 +101,7 @@ def test_token_exact_jaccard(token_docs):
 
 
 def test_end_to_end_token_dedup(token_docs):
-    cands = TD.token_minhash_candidates(token_docs, k=8, n_hashes=32, n_bands=16)
+    cands = TD.portable_token_minhash_candidates(token_docs, k=8)
     verified = TD.token_exact_jaccard(token_docs, cands, k=8).filter(
         F.col("jaccard") >= 0.5
     )
@@ -111,19 +111,18 @@ def test_end_to_end_token_dedup(token_docs):
 
 
 def test_signature_determinism(token_docs):
-    a = TD.token_minhash_candidates(token_docs, k=8).collect()
-    b = TD.token_minhash_candidates(token_docs, k=8).collect()
+    a = TD.portable_token_minhash_candidates(token_docs, k=8).collect()
+    b = TD.portable_token_minhash_candidates(
+        token_docs.repartition(3), k=8
+    ).collect()
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
 def test_token_minhash_jvm_tier_finds_planted_dups(spark):
-    """The all-JVM token MinHash tier finds exact and near duplicates of
-    token sequences and stays deterministic across runs."""
+    """The all-JVM (md5-portable) token MinHash tier finds exact and
+    near duplicates of long random token sequences, pairs nothing else,
+    and stays deterministic across runs."""
     import numpy as np
-
-    from ensembl_datacheck_spark.operators.token_dedup import (
-        token_minhash_candidates_jvm,
-    )
 
     rng = np.random.default_rng(5)
     rows = []
@@ -138,19 +137,17 @@ def test_token_minhash_jvm_tier_finds_planted_dups(spark):
     rows.append((99, rng.integers(0, 50_000, size=3).tolist()))  # < k tokens
     df = spark.createDataFrame(rows, "doc_id long, tokens array<int>")
 
-    pairs = {(r["id_a"], r["id_b"])
-             for r in token_minhash_candidates_jvm(df, k=8, n_hashes=32,
-                                                   n_bands=16).collect()}
-    assert (1, 2) in pairs
-    assert (1, 3) in pairs and (2, 3) in pairs
-    assert not any(99 in p for p in pairs)  # short doc hashes but no dup
-    unrelated = [p for p in pairs if p[0] >= 4 and p[1] >= 4]
-    assert len(unrelated) <= 2  # random 200-token seqs rarely collide
-
-    again = {(r["id_a"], r["id_b"])
-             for r in token_minhash_candidates_jvm(df, k=8, n_hashes=32,
-                                                   n_bands=16).collect()}
-    assert pairs == again
+    for k in (3, 8):
+        pairs = {(r["id_a"], r["id_b"])
+                 for r in TD.portable_token_minhash_candidates(
+                     df, k=k).collect()}
+        # the short doc (< k tokens) hashes as one shingle but pairs
+        # with nothing; random 200-token sequences do not collide
+        assert pairs == {(1, 2), (1, 3), (2, 3)}, k
+        again = {(r["id_a"], r["id_b"])
+                 for r in TD.portable_token_minhash_candidates(
+                     df, k=k).collect()}
+        assert pairs == again
 
 
 def test_connected_components_long_chain_pointer_doubling(spark):

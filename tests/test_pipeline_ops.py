@@ -1162,17 +1162,6 @@ def test_asof_join_tolerates_map_typed_right_columns(spark):
     assert r["attrs"] == {"k": "v"}
 
 
-def test_salted_join_rejects_zero_salt(spark):
-    import pytest as _pytest
-
-    from ensembl_datacheck_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame([(1, 10)], "k long, row_id long")
-    dim = spark.createDataFrame([(1, "x")], "k long, v string")
-    with _pytest.raises(ValueError, match="n_salt"):
-        salted_join(fact, dim, "k", "row_id", n_salt=0)
-
-
 # ---------------------------------------------------------------------------
 # token rarity (operators/rarity.py)
 # ---------------------------------------------------------------------------
@@ -1749,6 +1738,23 @@ class TestLmScoring:
 # --- DSIR importance resampling (operators/importance.py) -------------------
 
 
+def _py_gram_bag(toks, n_buckets):
+    """Pure-Python portable-tier feature bag of one token array: md5 of
+    each unigram / '_'-joined bigram string, first 8 hex digits mod B,
+    after dropping NULL/negative elements."""
+    import hashlib
+    from collections import Counter
+
+    clean = [t for t in (toks or []) if t is not None and t >= 0]
+    grams = [str(w) for w in clean] + [
+        f"{a}_{b}" for a, b in zip(clean, clean[1:])
+    ]
+    return Counter(
+        int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
+        for g in grams
+    )
+
+
 class TestDsirImportance:
     @pytest.fixture(scope="class")
     def dsir_docs(self, spark):
@@ -1763,24 +1769,22 @@ class TestDsirImportance:
         ).cache()
 
     @staticmethod
+    def _en_weights(docs, n_buckets):
+        """Fused DSIR weights with the lang='en' slice as target."""
+        from ensembl_datacheck_spark.operators import importance as IMP
+
+        tc = IMP.feature_counts_from_docs(
+            docs.filter(F.col("lang") == "en"), n_buckets=n_buckets
+        )
+        rc = IMP.feature_counts_from_docs(docs, n_buckets=n_buckets)
+        return IMP.importance_log_weights_from_docs(docs, tc, rc, n_buckets)
+
+    @staticmethod
     def _numpy_weights(rows, target_pred, n_buckets, alpha=1.0):
-        import hashlib
         import math
         from collections import Counter
 
-        def bucket(g):
-            return int(hashlib.md5(g.encode()).hexdigest()[:8], 16) % n_buckets
-
-        def feats(toks):
-            clean = [t for t in (toks or []) if t is not None and t >= 0]
-            if not clean:
-                return Counter()
-            grams = [str(w) for w in clean] + [
-                f"{a}_{b}" for a, b in zip(clean, clean[1:])
-            ]
-            return Counter(bucket(g) for g in grams)
-
-        bags = {i: feats(t) for i, lang, t in rows}
+        bags = {i: _py_gram_bag(t, n_buckets) for i, lang, t in rows}
         tc = Counter()
         rc = Counter()
         for i, lang, t in rows:
@@ -1805,20 +1809,8 @@ class TestDsirImportance:
         return out
 
     def test_log_weights_match_numpy(self, spark, dsir_docs):
-        from ensembl_datacheck_spark.operators import importance as IMP
-
         rows = [(r.doc_id, r.lang, r.tokens) for r in dsir_docs.collect()]
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
-        )
-        rc = IMP.feature_counts(feats)
-        got = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights(feats, tc, rc, 128).collect()
-        }
+        got = {r.doc_id: r for r in self._en_weights(dsir_docs, 128).collect()}
         want = self._numpy_weights(rows, lambda lang: lang == "en", 128)
         assert set(got) == set(want)  # 200/201 dropped; 202 cleans to [3]
         for i, (n, lw) in want.items():
@@ -1828,17 +1820,7 @@ class TestDsirImportance:
     def test_target_slice_scores_higher_on_average(self, spark, dsir_docs):
         """Sanity of the sign convention: documents FROM the target
         slice must average a higher importance weight than the rest."""
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
-        )
-        w = IMP.importance_log_weights(
-            feats, tc, IMP.feature_counts(feats), 128
-        )
+        w = self._en_weights(dsir_docs, 128)
         j = w.join(dsir_docs.select("doc_id", "lang"), "doc_id")
         means = {
             r.lang: r.m
@@ -1849,13 +1831,7 @@ class TestDsirImportance:
     def test_top_k_deterministic_and_ranked(self, spark, dsir_docs):
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
-        )
-        w = IMP.importance_log_weights(feats, tc, IMP.feature_counts(feats), 128)
+        w = self._en_weights(dsir_docs, 128)
         a = [(r.rank, r.doc_id) for r in IMP.select_top_k(w, 7).orderBy("rank").collect()]
         b = [(r.rank, r.doc_id) for r in IMP.select_top_k(w, 7).orderBy("rank").collect()]
         assert a == b and [r for r, _ in a] == list(range(1, 8))
@@ -1863,15 +1839,7 @@ class TestDsirImportance:
     def test_gumbel_deterministic_per_salt_and_weighted(self, spark, dsir_docs):
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        feats = IMP.hashed_ngram_features(dsir_docs, n_buckets=128)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                dsir_docs.filter(F.col("lang") == "en"), n_buckets=128
-            )
-        )
-        w = IMP.importance_log_weights(
-            feats, tc, IMP.feature_counts(feats), 128
-        ).cache()
+        w = self._en_weights(dsir_docs, 128).cache()
         s1 = sorted(r.doc_id for r in IMP.gumbel_top_k(w, 6, salt="a").collect())
         s1b = sorted(r.doc_id for r in IMP.gumbel_top_k(w, 6, salt="a").collect())
         s2 = sorted(r.doc_id for r in IMP.gumbel_top_k(w, 6, salt="b").collect())
@@ -1891,20 +1859,13 @@ class TestDsirImportance:
         from ensembl_datacheck_spark.plans.entry_queries import (
             _derived_tokens_col,
         )
-        from ensembl_datacheck_spark.operators import importance as IMP
 
         d = (
             spark.read.parquet(f"{sf}/documents.parquet")
             .filter(F.col("doc_id") < 400)
             .select("doc_id", "lang", _derived_tokens_col().alias("tokens"))
         )
-        feats = IMP.hashed_ngram_features(d, n_buckets=4096)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                d.filter(F.col("lang") == "en"), n_buckets=4096
-            )
-        )
-        w = IMP.importance_log_weights(feats, tc, IMP.feature_counts(feats), 4096)
+        w = self._en_weights(d, 4096)
         ws = sorted((r.log_weight for r in w.collect()), reverse=True)
         assert len(ws) > 61
         assert ws[59] - ws[60] > 1e-9, ws[58:62]
@@ -1912,14 +1873,26 @@ class TestDsirImportance:
     def test_feature_hygiene_matches_numpy_bag(self, spark):
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        df = spark.createDataFrame(
-            [(1, [5]), (2, [None, -1]), (3, None), (4, [])],
-            "doc_id long, tokens array<long>",
+        data = [(1, [5, 5, 7]), (2, [None, -1]), (3, None), (4, []),
+                (5, [None, 7, -2, 9])]
+        df = spark.createDataFrame(data, "doc_id long, tokens array<long>")
+        prof = IMP.feature_counts_from_docs(df, n_buckets=16)
+        got = {
+            r.doc_id: r
+            for r in IMP.importance_log_weights_from_docs(
+                df, prof, prof
+            ).collect()
+        }
+        want = self._numpy_weights(
+            [(i, "x", t) for i, t in data], lambda lang: True, 16
         )
-        rows = IMP.hashed_ngram_features(df, n_buckets=16).collect()
-        # only doc 1 survives (doc 2 cleans to empty); single token -> one
-        # unigram feature with cnt 1
-        assert len(rows) == 1 and rows[0].doc_id == 1 and rows[0].cnt == 1
+        # doc 2 cleans to empty, 3/4 have no tokens; doc 5 cleans to
+        # [7, 9] — NULL/negative elements are dropped before bigrams form
+        assert set(got) == set(want) == {1, 5}
+        for i, (n, lw) in want.items():
+            assert got[i].n_feat_obs == n, i
+            assert abs(got[i].log_weight - lw) < 1e-10, i
+        assert sum(r["count"] for r in prof.collect()) == 5 + 3
 
     def test_scoring_plan_broadcasts_both_profiles(self, spark):
         from tests.test_plans import plan_str
@@ -1929,13 +1902,12 @@ class TestDsirImportance:
             F.col("id").alias("doc_id"),
             F.array(F.col("id") % 13, F.col("id") % 7).cast("array<long>").alias("tokens"),
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=64)
-        tc = IMP.feature_counts(
-            IMP.hashed_ngram_features(df.filter(F.col("doc_id") < 20), n_buckets=64)
+        tc = IMP.feature_counts_from_docs(
+            df.filter(F.col("doc_id") < 20), n_buckets=64
         )
+        rc = IMP.feature_counts_from_docs(df, n_buckets=64)
         plan = plan_str(
-            IMP.importance_log_weights(feats, tc, IMP.feature_counts(feats), 64),
-            "simple",
+            IMP.importance_log_weights_from_docs(df, tc, rc, 64), "simple"
         )
         assert plan.count("BroadcastHashJoin") >= 2
         assert "SortMergeJoin" not in plan
@@ -2011,12 +1983,11 @@ class TestLmArrowTierAndStream:
             LM.lm_cross_entropy_arrow(df, fit, alpha=-1.0)
         with pytest.raises(ValueError, match="alpha"):
             LM.lm_bigram_cross_entropy(df, fit, LM.bigram_profile(df), alpha=0)
-        feats = IMP.hashed_ngram_features(df, n_buckets=8)
+        prof = IMP.feature_counts_from_docs(df, n_buckets=8)
         with pytest.raises(ValueError, match="alpha"):
-            IMP.importance_log_weights(
-                feats, IMP.feature_counts(feats), IMP.feature_counts(feats),
-                8, alpha=0.0,
-            )
+            IMP.importance_log_weights_from_docs(df, prof, prof, 8, alpha=0.0)
+        with pytest.raises(ValueError, match="alpha"):
+            IMP.importance_log_weights_arrow(df, prof, prof, 8, alpha=-1.0)
 
     def test_empty_scored_thresholds_raise(self, spark):
         from ensembl_datacheck_spark.operators import lm as LM
@@ -2089,15 +2060,16 @@ class TestReviewRegressionsLmDsir:
         df = spark.createDataFrame(
             [(1, [3, 4, 5]), (2, [3, 9])], "doc_id long, tokens array<long>"
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=64)
-        tc = IMP.feature_counts(feats)
+        tc = IMP.feature_counts_from_docs(df, n_buckets=64)
         explicit = {
             r.doc_id: r.log_weight
-            for r in IMP.importance_log_weights(feats, tc, tc, 64).collect()
+            for r in IMP.importance_log_weights_from_docs(
+                df, tc, tc, 64
+            ).collect()
         }
         inferred = {
             r.doc_id: r.log_weight
-            for r in IMP.importance_log_weights(feats, tc, tc).collect()
+            for r in IMP.importance_log_weights_from_docs(df, tc, tc).collect()
         }
         assert explicit == inferred
 
@@ -2107,23 +2079,9 @@ class TestReviewRegressionsLmDsir:
         df = spark.createDataFrame(
             [(1, [3, 4])], "doc_id long, tokens array<long>"
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=128)
-        tc = IMP.feature_counts(feats)
+        tc = IMP.feature_counts_from_docs(df, n_buckets=128)
         with pytest.raises(ValueError, match="disagrees"):
-            IMP.importance_log_weights(feats, tc, tc, 4096)
-
-    def test_weights_reject_missing_id_col(self, spark):
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        df = spark.createDataFrame(
-            [(1, [3, 4])], "item_id long, tokens array<long>"
-        )
-        feats = IMP.hashed_ngram_features(df, id_col="item_id", n_buckets=8)
-        tc = IMP.feature_counts(feats)
-        with pytest.raises(ValueError, match="id_col"):
-            IMP.importance_log_weights(feats, tc, tc, 8)  # default doc_id
-        ok = IMP.importance_log_weights(feats, tc, tc, 8, id_col="item_id")
-        assert ok.columns[0] == "item_id"
+            IMP.importance_log_weights_from_docs(df, tc, tc, 4096)
 
     def test_single_bucket_thresholds_empty_cutpoints(self, spark):
         from ensembl_datacheck_spark.operators import lm as LM
@@ -2159,43 +2117,38 @@ class TestDsirFusedPath:
         ).cache()
 
     def test_profile_from_docs_equals_bag_profile(self, spark, fused_docs):
+        from collections import Counter
+
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        bag = IMP.feature_counts(
-            IMP.hashed_ngram_features(fused_docs, n_buckets=64)
-        )
+        bag = Counter()
+        for r in fused_docs.collect():
+            bag.update(_py_gram_bag(r.tokens, 64))
         fused = IMP.feature_counts_from_docs(fused_docs, n_buckets=64)
-        a = {(r.feat, r["count"]) for r in bag.collect()}
-        b = {(r.feat, r["count"]) for r in fused.collect()}
-        assert a == b
+        assert {r.feat: r["count"] for r in fused.collect()} == dict(bag)
         assert fused.schema["feat"].metadata["n_buckets"] == 64
 
-    def test_fused_weights_equal_bag_weights(self, spark, fused_docs):
-        """Σ_f c_f·x_f == Σ_occurrences x_f — identical weights up to
-        float summation order (1e-10)."""
+    def test_parquet_round_trip_profile_width_guard(
+        self, spark, fused_docs, tmp_path
+    ):
+        """A profile whose feat metadata is lost on the way back from
+        parquet (read under a declared schema, or written by another
+        engine) evades the metadata width check; scoring it at a
+        narrower n_buckets must raise in the plan instead of
+        left-joining its out-of-width ids as 'unseen'."""
         from ensembl_datacheck_spark.operators import importance as IMP
 
-        feats = IMP.hashed_ngram_features(fused_docs, n_buckets=64)
-        target = IMP.feature_counts(
-            IMP.hashed_ngram_features(
-                fused_docs.filter(F.col("doc_id") % 3 == 0), n_buckets=64
-            )
+        path = str(tmp_path / "profile")
+        IMP.feature_counts_from_docs(fused_docs, n_buckets=64).write.parquet(
+            path
         )
-        raw = IMP.feature_counts(feats)
-        bag = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights(feats, target, raw).collect()
-        }
-        fused = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights_from_docs(
-                fused_docs, target, raw
+        back = spark.read.schema("feat long, count long").parquet(path)
+        assert back.schema["feat"].metadata == {}
+        assert back.agg(F.max("feat")).first()[0] >= 32
+        with pytest.raises(Exception, match="outside \\[0, 32\\)"):
+            IMP.importance_log_weights_from_docs(
+                fused_docs, back, back, n_buckets=32
             ).collect()
-        }
-        assert set(bag) == set(fused)
-        for i in bag:
-            assert bag[i].n_feat_obs == fused[i].n_feat_obs
-            assert abs(bag[i].log_weight - fused[i].log_weight) < 1e-10
 
     def test_fused_infers_and_validates_n_buckets(self, spark, fused_docs):
         from ensembl_datacheck_spark.operators import importance as IMP
@@ -2214,30 +2167,15 @@ class TestDsirFusedPath:
         with pytest.raises(ValueError, match="disagrees"):
             IMP.importance_log_weights_from_docs(fused_docs, target, raw_other)
 
-    def test_bag_path_validates_profile_widths_too(self, spark, fused_docs):
-        """Review regression: the BAG path must also reject a profile
-        hashed with a different width than the features — previously it
-        only checked the features frame, so a 32-bucket profile against
-        64-bucket features silently scored half the features as
-        'unseen'."""
-        from ensembl_datacheck_spark.operators import importance as IMP
-
-        feats = IMP.hashed_ngram_features(fused_docs, n_buckets=64)
-        narrow = IMP.feature_counts_from_docs(fused_docs, n_buckets=32)
-        wide = IMP.feature_counts(feats)
-        with pytest.raises(ValueError, match="disagrees"):
-            IMP.importance_log_weights(feats, narrow, wide)
-
     def test_fused_plan_one_doc_shuffle_no_bag_aggregate(
         self, spark, tmp_path
     ):
         """Plan pin for the 100 TB claim, on a PARQUET source (a Range
-        source lets Catalyst elide even the bag shuffle via known doc
-        locality — the token_rarity plan-pin finding — hiding the
-        contrast): the fused scorer's only document-data Exchange
-        hashes on doc_id alone (one row per doc), while the bag path
-        shuffles (doc_id, feat) — the ~10^9-row shuffle the SCALE
-        WARNING documents."""
+        source lets Catalyst elide shuffles via known doc locality —
+        the token_rarity plan-pin finding): the fused scorer's only
+        document-data Exchange hashes on doc_id alone (one row per
+        doc), never on (doc_id, feat) — the ~10^9-row per-document bag
+        shuffle BENCH/LM_1M.md measured."""
         import re
 
         from tests.test_plans import plan_str
@@ -2264,18 +2202,18 @@ class TestDsirFusedPath:
         )
         assert plan.count("BroadcastHashJoin") >= 2
         assert "SortMergeJoin" not in plan
-        bag_plan = plan_str(
-            IMP.hashed_ngram_features(df, n_buckets=64), "simple"
-        )
-        assert re.search(r"hashpartitioning\(doc_id#\d+L?, feat#", bag_plan)
 
 
 class TestDsirFastHashTier:
     def test_fast_tier_paths_agree_and_select_sane(self, spark):
-        """fast-tier fused weights equal fast-tier bag weights (same
-        identity as the portable tier), and the target slice still
-        scores higher on average — the hash tier changes feature IDS,
-        not the statistics."""
+        """fast-tier fused weights equal a driver-side re-scoring of the
+        fast-tier gram stream against the collected profiles, observe
+        as many grams per document as the portable tier, and the target
+        slice still scores higher on average — the hash tier changes
+        feature IDS, not the statistics."""
+        import math
+        from collections import Counter, defaultdict
+
         from ensembl_datacheck_spark.operators import importance as IMP
 
         rows = [
@@ -2286,25 +2224,41 @@ class TestDsirFastHashTier:
         df = spark.createDataFrame(
             rows, "doc_id long, lang string, tokens array<long>"
         )
-        feats = IMP.hashed_ngram_features(df, n_buckets=64, hash_tier="fast")
         target = IMP.feature_counts_from_docs(
             df.filter(F.col("lang") == "en"), n_buckets=64, hash_tier="fast"
         )
-        raw = IMP.feature_counts(feats)
-        bag = {
-            r.doc_id: r
-            for r in IMP.importance_log_weights(feats, target, raw).collect()
-        }
+        raw = IMP.feature_counts_from_docs(df, n_buckets=64, hash_tier="fast")
         fused = {
             r.doc_id: r
             for r in IMP.importance_log_weights_from_docs(
                 df, target, raw, hash_tier="fast"
             ).collect()
         }
-        assert set(bag) == set(fused)
-        for i in bag:
-            assert bag[i].n_feat_obs == fused[i].n_feat_obs
-            assert abs(bag[i].log_weight - fused[i].log_weight) < 1e-10
+        tc = {r.feat: r["count"] for r in target.collect()}
+        rc = {r.feat: r["count"] for r in raw.collect()}
+        T, R = sum(tc.values()), sum(rc.values())
+        norm = math.log(R + 64) - math.log(T + 64)
+        bags = defaultdict(Counter)
+        for r in IMP._gram_stream(
+            df, "doc_id", "tokens", 64, True, "fast"
+        ).collect():
+            bags[r.doc_id][r.feat] += 1
+        assert set(bags) == set(fused)
+        for i, bag in bags.items():
+            n = sum(bag.values())
+            lw = n * norm + sum(
+                c * (math.log(tc.get(f, 0) + 1) - math.log(rc.get(f, 0) + 1))
+                for f, c in bag.items()
+            )
+            assert fused[i].n_feat_obs == n
+            assert abs(fused[i].log_weight - lw) < 1e-10
+        portable = IMP.feature_counts_from_docs(df, n_buckets=64)
+        assert {
+            r.doc_id: r.n_feat_obs
+            for r in IMP.importance_log_weights_from_docs(
+                df, portable, portable
+            ).collect()
+        } == {i: r.n_feat_obs for i, r in fused.items()}
         j = (
             IMP.importance_log_weights_from_docs(df, target, raw,
                                                  hash_tier="fast")
@@ -2328,12 +2282,6 @@ class TestDsirFastHashTier:
         with pytest.raises(ValueError, match="hash"):
             IMP.importance_log_weights_from_docs(
                 df, fast, fast  # profiles fast, scorer defaults portable
-            )
-        bag_fast = IMP.hashed_ngram_features(df, n_buckets=64,
-                                             hash_tier="fast")
-        with pytest.raises(ValueError, match="hash"):
-            IMP.importance_log_weights(
-                bag_fast, portable, portable
             )
         with pytest.raises(ValueError, match="hash_tier"):
             IMP.feature_counts_from_docs(df, n_buckets=64, hash_tier="md5")

@@ -117,32 +117,6 @@ def test_bucketed_join_has_no_exchange(spark, tmp_path):
         spark.sql("DROP TABLE IF EXISTS bkt_b")
 
 
-def test_salted_join_equals_plain_join(spark):
-    """salted_join must return exactly the plain join's rows on hot-key
-    data (one key owns 70% of the fact side)."""
-    from ensembl_datacheck_spark.operators.skew import salted_join
-
-    fact = spark.createDataFrame(
-        [(i, "hot" if i % 10 < 7 else f"k{i % 10}") for i in range(2000)],
-        "row_id long, k string",
-    )
-    dim = spark.createDataFrame(
-        [("hot", 1), ("k7", 2), ("k8", 3)], "k string, v int"
-    )
-    plain = fact.join(dim, "k").select("row_id", "v")
-    salted = salted_join(fact, dim, "k", "row_id", n_salt=8).select("row_id", "v")
-    assert plain.exceptAll(salted).isEmpty() and salted.exceptAll(plain).isEmpty()
-    # salt actually spreads the hot key: >1 distinct salt on 'hot' rows
-    from pyspark.sql import functions as F2
-    n_salts = (
-        salted_join(fact, dim, "k", "row_id", n_salt=8)
-        .filter(F2.col("k") == "hot")
-        .select(F2.pmod(F2.xxhash64(F2.col("row_id").cast("string")), F2.lit(8)))
-        .distinct().count()
-    )
-    assert n_salts > 1
-
-
 def test_passage_dedup_no_digest_window_and_partial_min(spark):
     """passage_dedup's skew story: first-occurrence selection must be an
     aggregation with a map-side partial (hot passages collapse before
